@@ -242,8 +242,6 @@ def knn_geometry(
     return out.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(int(k))
 
 
-CERT_UPFRONT_MAX_LEFTS = 65_536
-
 # fragment count for the tail-round salted two-stage top-k: each giant
 # left group is sorted as this many parallel fragments (stage A), then
 # the <= TAIL_SALT * k survivors per left merge in stage B. 64 keeps
@@ -273,9 +271,10 @@ TAIL_SALT_MIN_GROUP = 65_536
 
 # a round is a TAIL round (driver-side cellset prefilter + fine-grid
 # ring refinement + finer bucket levels + salted two-stage top-k) when
-# this few lefts remain — matches the upfront-seeding bound, so the
-# small-left one-round path always gets its coarse ring radii refined.
-TAIL_MAX_LEFTS = CERT_UPFRONT_MAX_LEFTS
+# its radii are certified ring bounds (every round after round 0) and
+# this few lefts remain.
+TAIL_MAX_LEFTS = 65_536
+CERT_UPFRONT_MAX_LEFTS = TAIL_MAX_LEFTS  # old name, imported by layerbench/workloads.py
 
 
 def _sparse_ring_refine(
@@ -648,6 +647,67 @@ def _knn_point_candidates_multi(
     return j.select("left_id", "right_id", d.alias("dist"), "r")
 
 
+def _split_buckets(
+    buckets: list[tuple[int, int, float]], ext_u: float
+) -> tuple[list[list], list[tuple[int, float]], dict[int, int]]:
+    """Plan one round's candidate joins from its (level, count, max r)
+    buckets. Returns ``(small, big_parts, lvl_remap)``: ``small`` holds
+    ``[lvl, cnt, rmx, est]`` for the buckets that share ONE broadcast
+    multilevel join (a single pass over right keyed on (level, cell)),
+    ``big_parts`` holds ``(lvl, est)`` for the buckets that each get a
+    partitioned join, and ``lvl_remap`` maps folded levels to the level
+    whose join serves them. ``est`` is the estimated EXPLODED left row
+    count — quantization keeps boxes <= ~3x3 cells except at the
+    level-4 clamp (near-cover radii), where the factor grows.
+
+    A bucket broadcasts when it has <= 200k lefts (the candidate join
+    then streams right instead of re-shuffling it) and <= 2M exploded
+    rows. LEVEL MERGE: the multilevel join explodes EVERY right point
+    once per present level, so each extra level is a full extra probe
+    pass over right; a coarser broadcast bucket folds into the next
+    finer one when the COMBINED re-estimate stays under the same 2M cap
+    — finer cells still cover the box (any level is correct), the only
+    cost is more broadcast rows (measured: 4 present levels -> 2 at the
+    16M bench shape). If the broadcast total still exceeds
+    4M rows, the largest buckets are demoted to partitioned joins."""
+    small: list[list] = []
+    big_parts: list[tuple[int, float]] = []
+    for lvl, cnt, rmx in buckets:
+        cell_u = ext_u / (1 << int(lvl))
+        explode_factor = (2.0 * float(rmx) / cell_u + 2.0) ** 2
+        if cnt <= 200_000 and cnt * explode_factor <= 2_000_000:
+            small.append([int(lvl), cnt, float(rmx), cnt * explode_factor])
+        else:
+            big_parts.append((int(lvl), cnt * explode_factor))
+    small.sort()
+    lvl_remap: dict[int, int] = {}
+    i = 0
+    while i < len(small) - 1:
+        lvl_s, cnt_s, rmx_s, _ = small[i]
+        lvl_t, cnt_t, rmx_t, est_t = small[i + 1]
+        cell_t = ext_u / (1 << int(lvl_t))
+        ef_t = (2.0 * float(rmx_s) / cell_t + 2.0) ** 2
+        est = est_t + cnt_s * ef_t
+        if est <= 2_000_000:
+            for s_, d_ in list(lvl_remap.items()):
+                if d_ == lvl_s:
+                    lvl_remap[s_] = lvl_t
+            lvl_remap[lvl_s] = lvl_t
+            small[i + 1] = [lvl_t, cnt_s + cnt_t, max(rmx_s, rmx_t), est]
+            small.pop(i)
+        else:
+            i += 1
+    small_rows = sum(e for _, _, _, e in small)
+    while small_rows > 4_000_000 and len(small) > 1:
+        # demote the bucket with the largest estimated exploded row
+        # count, keeping the broadcast savings for the rest (ADVICE r4)
+        worst = max(range(len(small)), key=lambda i: small[i][3])
+        lvl_w, _, _, est_w = small.pop(worst)
+        big_parts.append((lvl_w, est_w))
+        small_rows -= est_w
+    return small, big_parts, lvl_remap
+
+
 def knn_join(
     left: DataFrame,
     right: DataFrame,
@@ -699,23 +759,12 @@ def knn_join(
     * a left whose r reaches the cover radius certifies
       unconditionally.
 
-    When the LEFT side is small (<= ``CERT_UPFRONT_MAX_LEFTS``), the
-    ring bounds are computed driver-side for ALL lefts up front
-    (numpy-vectorized over one bounded collect) and seed round 0
-    directly — the join then converges in ONE round with no density
-    estimate at all. Passing ``bounds`` AND ``right_count`` (both free
-    from table metadata at production scale) skips the up-front
-    min/max/count pass over right entirely; ``right_count`` is a grid-
-    sizing hint only — correctness never depends on its accuracy. Seeding certified radii up front is deliberately
-    NOT done for large left tables: the ring bound's resolution is the
-    coarse grid (~64 rights/cell), so in uniform regions it overshoots
-    the density estimate by ~sqrt(cell^2 * 2 / (pi k / rho)) — measured
-    ~20x the candidate pairs at 64M/1M-left scale — while the density
-    estimate certifies ~99% of lefts in round 0 at ~12-36 candidates
-    each and the certified round-1 radii mop up the rest in one tight
-    pass. A grid fine enough (~k rights/cell) to make up-front seeding
-    cheap would itself cost a near-singleton-group count shuffle (~13M
-    groups at 64M — the round-3 measured pre-loop pathology).
+    Every left table, small or large, starts from the density estimate
+    below: seeding small left tables with up-front coarse ring radii was
+    measured ~15x slower warm on city-clustered data (1M rights, 4,096
+    lefts, k=3, local[4]: 170-183 s vs 9-12 s) because coarse cells
+    certify radii that sweep whole cities. ``bounds`` plus
+    ``right_count`` skip the min/max/count pass over right.
 
     The start radius is PER-LEFT density-adaptive, from two grid
     counts over right: a coarse grid (~64 rows/cell) dilated to a
@@ -898,20 +947,6 @@ def knn_join(
         P[1:, 1:] = G.cumsum(axis=0).cumsum(axis=1)
         return P
 
-    _P_cache: list = []  # computed at most once per call
-
-    def _prefix():
-        if not _P_cache:
-            _P_cache.append(_cell_prefix_np())
-        return _P_cache[0]
-
-    dense_r = None
-    # True whenever every row of `remaining` carries a CERTIFIED-complete
-    # radius (kth-NN <= r guaranteed): the up-front small-left seeding,
-    # and every post-transition round. Density-guess round 0 (and a
-    # user-supplied init_radius round 0) are False.
-    certified_radii = False
-    seed_pdf = None  # driver-resident seed frame (small-left path)
     if init_radius is not None:
         r0 = F.lit(min(max(float(init_radius), r_floor), cover_r))
         remaining = lpts.select("lid", "px", "py", r0.alias("r"))
@@ -930,180 +965,146 @@ def knn_join(
         )
         C_df = C
         _dbg("coarse density counts checkpointed")
-        # bounded probe instead of a full lpts.count() (ADVICE r5): a
-        # LIMIT of threshold+1 rows decides the branch, and when the
-        # left IS small the probe already holds every row — reuse it
-        # and skip the second collect entirely.
-        probe_pdf = lpts.limit(CERT_UPFRONT_MAX_LEFTS + 1).toPandas()
-        _dbg("left-size probe collected")
-        if len(probe_pdf) <= CERT_UPFRONT_MAX_LEFTS:
-            # small left side: certified-complete ring radii for ALL
-            # lefts up front (one bounded collect + vectorized numpy)
-            # — round 0 certifies everything, the loop runs ONCE, and
-            # the whole density-estimate stage (dilation + fine-count
-            # joins) is skipped. Both metrics. The frame is built below
-            # via _remaining_from_pdf so the quantized level rides
-            # along as a column and bucket stats need no Spark job.
-            P0 = _prefix()
-            pdf = probe_pdf
-            rb0 = _ring_certified_radii(
-                P0,
-                nc_d,
-                cell_d,
-                bounds,
-                pdf["px"].to_numpy(),
-                pdf["py"].to_numpy(),
-                k,
-                metric,
-                cover_r,
-                r_floor,
-            )
-            seed_pdf = pdf.assign(r=rb0)
-            remaining = None
-            certified_radii = True
-        else:
-            # ONE tiny job on checkpointed C serves both the max-count
-            # (densest-cell radius scale) and the dense-cell count that
-            # previously ran as a second job
-            crow = C.agg(
-                F.max("cnt").alias("mx"),
-                F.sum((F.col("cnt") >= 512).cast("long")).alias("nd"),
-            ).first()
-            mx = crow["mx"] or 1
-            n_dense = int(crow["nd"] or 0)
-            _dbg("density-grid stats aggregated")
-            dense_r = cell_d * math.sqrt(float(k) / max(float(mx), 1.0)) * unit
-            # 3x3-neighborhood sum: dilate C by the 9 offsets, re-aggregate,
-            # then each left looks up its OWN cell — lefts stay un-exploded
-            offs = F.array(
-                *[
-                    F.struct(
-                        (F.col("ccx") + F.lit(dx)).alias("ncx"),
-                        (F.col("ccy") + F.lit(dy)).alias("ncy"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                ]
-            )
-            N = (
-                C.select("cnt", F.explode(offs).alias("_o"))
-                .groupBy(F.col("_o.ncx").alias("ncx"), F.col("_o.ncy").alias("ncy"))
-                .agg(F.sum("cnt").alias("S"))
-            )
-            if nc_d <= 1024:
-                # <= (1026)^2 dilated cells = a few MB — broadcast so the
-                # per-left density lookup below never shuffles the lefts
-                # (the planner has no row estimate for a post-explode
-                # aggregate and falls back to a sort-merge join)
-                N = F.broadcast(N)
-            # FINE refinement: the coarse estimate dilutes clusters much
-            # smaller than a coarse cell (a 0.2-degree city inside a
-            # 1.4-degree cell reads ~20x too sparse -> radii ~20x too big ->
-            # ~400x candidate blow-up, measured). A second count at the
-            # fine level sized for the densest region fixes exactly that
-            # case: when the left's OWN fine cell holds enough points the
-            # fine-scale estimate wins; otherwise the dilated coarse
-            # neighborhood estimate stands.
-            f_level = choose_grid_level(bounds, 2 * dense_r / unit, 2 * dense_r / unit)
-            nc_f = 1 << f_level
-            cell_f = ext / nc_f
-
-            def _fine_cell(c, lo):
-                return F.least(
-                    F.lit(nc_f - 1),
-                    F.greatest(F.lit(0), F.floor((c - F.lit(lo)) / F.lit(cell_f))),
-                ).cast("long")
-
-            # only DENSE coarse cells feed the fine count: elsewhere the
-            # fine grid (sized for the densest region) holds ~0-1 points
-            # per cell, and aggregating those would shuffle one near-
-            # singleton group per right row (~13M groups at 64M, measured
-            # as the dominant pre-loop cost and a poorly-scaling one). A
-            # coarse cell averaging 64 rows by construction, 512+ marks a
-            # genuine cluster; the mildly-dense cells this skips lose only
-            # a mildly-diluted coarse estimate (one extra round for a small
-            # cohort at worst).
-            dense_cells = C.filter(F.col("cnt") >= 512).select("ccx", "ccy")
-            if n_dense <= 500_000:
-                dense_cells = F.broadcast(dense_cells)
-            Cf = None
-            # the fine count is a density HINT only (radius sizing —
-            # certification never reads it), so at large |right| an
-            # eighth-rate deterministic sample with counts scaled back
-            # up gives the same radii to within a few percent while the
-            # fine-count aggregation hashes 8x fewer rows (the dense
-            # regions are >= 512 rows/coarse cell by construction, so a
-            # trusted fine cell still samples >= ~100 rows). Small
-            # rights keep exact counts — fixture-scale estimates would
-            # otherwise be noise.
-            cf_rate = 0.125 if n_right >= 4_000_000 else 1.0
-            cf_src = rpts if cf_rate >= 1.0 else rpts.sample(
-                fraction=cf_rate, seed=7
-            )
-            if n_dense:  # no dense cells -> skip the fine pass entirely
-                Cf = (
-                    cf_src.join(
-                        dense_cells,
-                        (_coarse_cell(F.col("qx"), bounds[0]) == F.col("ccx"))
-                        & (_coarse_cell(F.col("qy"), bounds[1]) == F.col("ccy")),
-                        "left_semi",
-                    )
-                    .groupBy(
-                        (
-                            _fine_cell(F.col("qx"), bounds[0]) * F.lit(nc_f)
-                            + _fine_cell(F.col("qy"), bounds[1])
-                        ).alias("fcell")
-                    )
-                    .agg((F.count(F.lit(1)) / F.lit(cf_rate)).alias("fcnt"))
+        # ONE tiny job on checkpointed C serves both the max-count
+        # (densest-cell radius scale) and the dense-cell count that
+        # previously ran as a second job
+        crow = C.agg(
+            F.max("cnt").alias("mx"),
+            F.sum((F.col("cnt") >= 512).cast("long")).alias("nd"),
+        ).first()
+        mx = crow["mx"] or 1
+        n_dense = int(crow["nd"] or 0)
+        _dbg("density-grid stats aggregated")
+        dense_r = cell_d * math.sqrt(float(k) / max(float(mx), 1.0)) * unit
+        # 3x3-neighborhood sum: dilate C by the 9 offsets, re-aggregate,
+        # then each left looks up its OWN cell — lefts stay un-exploded
+        offs = F.array(
+            *[
+                F.struct(
+                    (F.col("ccx") + F.lit(dx)).alias("ncx"),
+                    (F.col("ccy") + F.lit(dy)).alias("ncy"),
                 )
-            lcell = lpts.select(
-                "lid",
-                "px",
-                "py",
-                _coarse_cell(F.col("px"), bounds[0]).alias("_lcx"),
-                _coarse_cell(F.col("py"), bounds[1]).alias("_lcy"),
-                (
-                    _fine_cell(F.col("px"), bounds[0]) * F.lit(nc_f)
-                    + _fine_cell(F.col("py"), bounds[1])
-                ).alias("_lfc"),
+                for dx in (-1, 0, 1)
+                for dy in (-1, 0, 1)
+            ]
+        )
+        N = (
+            C.select("cnt", F.explode(offs).alias("_o"))
+            .groupBy(F.col("_o.ncx").alias("ncx"), F.col("_o.ncy").alias("ncy"))
+            .agg(F.sum("cnt").alias("S"))
+        )
+        if nc_d <= 1024:
+            # <= (1026)^2 dilated cells = a few MB — broadcast so the
+            # per-left density lookup below never shuffles the lefts
+            # (the planner has no row estimate for a post-explode
+            # aggregate and falls back to a sort-merge join)
+            N = F.broadcast(N)
+        # FINE refinement: the coarse estimate dilutes clusters much
+        # smaller than a coarse cell (a 0.2-degree city inside a
+        # 1.4-degree cell reads ~20x too sparse -> radii ~20x too big ->
+        # ~400x candidate blow-up, measured). A second count at the
+        # fine level sized for the densest region fixes exactly that
+        # case: when the left's OWN fine cell holds enough points the
+        # fine-scale estimate wins; otherwise the dilated coarse
+        # neighborhood estimate stands.
+        f_level = choose_grid_level(bounds, 2 * dense_r / unit, 2 * dense_r / unit)
+        nc_f = 1 << f_level
+        cell_f = ext / nc_f
+
+        def _fine_cell(c, lo):
+            return F.least(
+                F.lit(nc_f - 1),
+                F.greatest(F.lit(0), F.floor((c - F.lit(lo)) / F.lit(cell_f))),
+            ).cast("long")
+
+        # only DENSE coarse cells feed the fine count: elsewhere the
+        # fine grid (sized for the densest region) holds ~0-1 points
+        # per cell, and aggregating those would shuffle one near-
+        # singleton group per right row (~13M groups at 64M, measured
+        # as the dominant pre-loop cost and a poorly-scaling one). A
+        # coarse cell averaging 64 rows by construction, 512+ marks a
+        # genuine cluster; the mildly-dense cells this skips lose only
+        # a mildly-diluted coarse estimate (one extra round for a small
+        # cohort at worst).
+        dense_cells = C.filter(F.col("cnt") >= 512).select("ccx", "ccy")
+        if n_dense <= 500_000:
+            dense_cells = F.broadcast(dense_cells)
+        Cf = None
+        # the fine count is a density HINT only (radius sizing —
+        # certification never reads it), so at large |right| an
+        # eighth-rate deterministic sample with counts scaled back
+        # up gives the same radii to within a few percent while the
+        # fine-count aggregation hashes 8x fewer rows (the dense
+        # regions are >= 512 rows/coarse cell by construction, so a
+        # trusted fine cell still samples >= ~100 rows). Small
+        # rights keep exact counts — fixture-scale estimates would
+        # otherwise be noise.
+        cf_rate = 0.125 if n_right >= 4_000_000 else 1.0
+        cf_src = rpts if cf_rate >= 1.0 else rpts.sample(
+            fraction=cf_rate, seed=7
+        )
+        if n_dense:  # no dense cells -> skip the fine pass entirely
+            Cf = (
+                cf_src.join(
+                    dense_cells,
+                    (_coarse_cell(F.col("qx"), bounds[0]) == F.col("ccx"))
+                    & (_coarse_cell(F.col("qy"), bounds[1]) == F.col("ccy")),
+                    "left_semi",
+                )
+                .groupBy(
+                    (
+                        _fine_cell(F.col("qx"), bounds[0]) * F.lit(nc_f)
+                        + _fine_cell(F.col("qy"), bounds[1])
+                    ).alias("fcell")
+                )
+                .agg((F.count(F.lit(1)) / F.lit(cf_rate)).alias("fcnt"))
             )
-            joined = lcell.join(
-                N,
-                (F.col("_lcx") == F.col("ncx")) & (F.col("_lcy") == F.col("ncy")),
-                "left",
-            )
-            if Cf is not None:
-                joined = joined.join(Cf, F.col("_lfc") == F.col("fcell"), "left")
-            else:
-                joined = joined.withColumn("fcnt", F.lit(None).cast("long"))
-            # sizing math (Poisson): a radius r has expected ball count
-            # m = rho*pi*r^2; certifying needs >= k in the ball, so aim for
-            # m ~ pi*k (P(<k) < 1% at k=3) while keeping box candidates
-            # (4/pi*m per left) small. fine: r = cell_f*sqrt(3k/S_f) gives
-            # m = 3*pi*k (~28 at k=3, certifies, ~36 candidates/left).
-            # coarse (S = 3x3 neighborhood sum, rho = S/(9*cell^2)):
-            # r = cell*sqrt(9k/S) gives m = pi*k — the earlier sqrt(3k/S)
-            # read m = pi*k/3 ~ 3 and FAILED ~60% of uniform lefts.
-            s = F.coalesce(F.col("S"), F.lit(0)).cast("double")
-            sf = F.coalesce(F.col("fcnt"), F.lit(0)).cast("double")
-            three_k = F.lit(3.0 * float(k))
-            r0_coarse = F.lit(cell_d) * F.least(
-                F.lit(1.0), F.sqrt(F.lit(9.0 * float(k)) / F.greatest(s, F.lit(1.0)))
-            )
-            # trust the fine cell only from 9k points up: cells in the
-            # 3k..9k band are mostly cluster EDGES, where the cell's count
-            # is real but the left's k-th neighbor lies outside the cluster
-            # — the tiny fine radius then fails 2 extra rounds (measured)
-            r0_fine = F.lit(cell_f) * F.sqrt(three_k / sf)
-            r0 = F.when(
-                sf >= F.lit(9.0 * float(k)), F.least(r0_fine, r0_coarse)
-            ).otherwise(r0_coarse)
-            r0 = F.least(F.greatest(r0 * F.lit(unit), F.lit(r_floor)), F.lit(cover_r))
-            remaining = joined.select("lid", "px", "py", r0.alias("r"))
+        lcell = lpts.select(
+            "lid",
+            "px",
+            "py",
+            _coarse_cell(F.col("px"), bounds[0]).alias("_lcx"),
+            _coarse_cell(F.col("py"), bounds[1]).alias("_lcy"),
+            (
+                _fine_cell(F.col("px"), bounds[0]) * F.lit(nc_f)
+                + _fine_cell(F.col("py"), bounds[1])
+            ).alias("_lfc"),
+        )
+        joined = lcell.join(
+            N,
+            (F.col("_lcx") == F.col("ncx")) & (F.col("_lcy") == F.col("ncy")),
+            "left",
+        )
+        if Cf is not None:
+            joined = joined.join(Cf, F.col("_lfc") == F.col("fcell"), "left")
+        else:
+            joined = joined.withColumn("fcnt", F.lit(None).cast("long"))
+        # sizing math (Poisson): a radius r has expected ball count
+        # m = rho*pi*r^2; certifying needs >= k in the ball, so aim for
+        # m ~ pi*k (P(<k) < 1% at k=3) while keeping box candidates
+        # (4/pi*m per left) small. fine: r = cell_f*sqrt(3k/S_f) gives
+        # m = 3*pi*k (~28 at k=3, certifies, ~36 candidates/left).
+        # coarse (S = 3x3 neighborhood sum, rho = S/(9*cell^2)):
+        # r = cell*sqrt(9k/S) gives m = pi*k — the earlier sqrt(3k/S)
+        # read m = pi*k/3 ~ 3 and FAILED ~60% of uniform lefts.
+        s = F.coalesce(F.col("S"), F.lit(0)).cast("double")
+        sf = F.coalesce(F.col("fcnt"), F.lit(0)).cast("double")
+        three_k = F.lit(3.0 * float(k))
+        r0_coarse = F.lit(cell_d) * F.least(
+            F.lit(1.0), F.sqrt(F.lit(9.0 * float(k)) / F.greatest(s, F.lit(1.0)))
+        )
+        # trust the fine cell only from 9k points up: cells in the
+        # 3k..9k band are mostly cluster EDGES, where the cell's count
+        # is real but the left's k-th neighbor lies outside the cluster
+        # — the tiny fine radius then fails 2 extra rounds (measured)
+        r0_fine = F.lit(cell_f) * F.sqrt(three_k / sf)
+        r0 = F.when(
+            sf >= F.lit(9.0 * float(k)), F.least(r0_fine, r0_coarse)
+        ).otherwise(r0_coarse)
+        r0 = F.least(F.greatest(r0 * F.lit(unit), F.lit(r_floor)), F.lit(cover_r))
+        remaining = joined.select("lid", "px", "py", r0.alias("r"))
     # lazy checkpoint: the first bucket-stats job below materializes it,
     # so init costs ONE barrier (checkpoint+stats fused), not two.
-    # (For the driver-resident seed path the checkpoint and the bucket
-    # stats are both handled after the level helpers are defined.)
     # The skinny (lid, px, py, r) frame is coalesced to the scheduler's
     # default parallelism first: the density plan inherits the full
     # shuffle width from its exchanges, and every later consumer
@@ -1112,9 +1113,8 @@ def knn_join(
     # measured ~2 s/round of pure task launch at 256 partitions for a
     # 250k-row frame. defaultParallelism scales with the cluster, so
     # this is not a local-mode constant.
-    if remaining is not None:
-        dp = max(1, lpts.sparkSession.sparkContext.defaultParallelism)
-        remaining = remaining.coalesce(dp).localCheckpoint(eager=False)
+    dp = max(1, lpts.sparkSession.sparkContext.defaultParallelism)
+    remaining = remaining.coalesce(dp).localCheckpoint(eager=False)
 
     # PER-LEFT grid level, every round: one level cannot serve mixed
     # radii (tiny boxes in a coarse cell cross-product the whole cell's
@@ -1186,12 +1186,7 @@ def knn_join(
             .collect()
         )
 
-    if seed_pdf is not None:
-        remaining, buckets = _remaining_from_pdf(seed_pdf)
-        lvl_active = F.col("_lvl")
-        remaining = remaining.localCheckpoint(eager=False)
-    else:
-        buckets = _bucket_stats()
+    buckets = _bucket_stats()
     n_rem = sum(c for _, c, _ in buckets)
     if debug:
         print(
@@ -1207,20 +1202,14 @@ def knn_join(
         F.col("dist").asc(), F.col("right_id").asc()
     )
     w_all = Window.partitionBy("left_id")
-    # once the uncertified tail is small, BROADCAST it: the candidate
-    # join then streams the right table instead of re-shuffling it —
-    # the late (sparse-void) rounds cost O(|R|) scan, not O(|R|) shuffle
-    bcast_lefts = 200_000
-
-    rb_udf = None  # lazy: built once, on the first survivor transition
 
     def _ring_rb_udf():
-        # distributed twin of the up-front path: the prefix sum is
-        # broadcast once and each Arrow batch runs the vectorized ring
-        # search — survivor counts can be anything (no driver collect)
+        # survivor ring bounds: the prefix sum is broadcast once and
+        # each Arrow batch runs the vectorized ring search — survivor
+        # counts can be anything (no driver collect)
         from pyspark.sql.types import DoubleType
 
-        bc = rpts.sparkSession.sparkContext.broadcast(_prefix())
+        bc = rpts.sparkSession.sparkContext.broadcast(_cell_prefix_np())
 
         @F.pandas_udf(DoubleType())
         def rb(pxs: pd.Series, pys: pd.Series) -> pd.Series:
@@ -1255,6 +1244,11 @@ def knn_join(
                     file=sys.stderr,
                     flush=True,
                 )
+            # a TAIL round needs certified radii, i.e. round > 0:
+            # _sparse_ring_refine only tightens an already-certified
+            # r_old, and round 0's density or init_radius guesses are
+            # not certified.
+            tail = round_idx > 0 and n_rem <= TAIL_MAX_LEFTS
             # straggler-tail prefilter: once the tail is tiny, collect
             # it driver-side and push an isin() over the coarse cells
             # its boxes touch into the cached right scan — tail rounds
@@ -1272,9 +1266,9 @@ def knn_join(
             # salting defaults ON for tail rounds; the fine-grid counts
             # switch it off when no left's final box can hold a giant
             # candidate group (stage A is then two wasted shuffles)
-            tail_salt_needed = True
+            tail_salt = tail
             t_sub = _time.perf_counter()
-            if n_rem <= TAIL_MAX_LEFTS:
+            if tail:
                 from geo_index_spark.operators.search import geo_query_window
 
                 def _tail_cellset(rows) -> set[int] | None:
@@ -1385,10 +1379,8 @@ def knn_join(
                         # final box holds a modest group, the plain
                         # one-exchange window beats stage A's two extra
                         # shuffles (each a flat job-launch cost)
-                        tail_salt_needed = bool(
-                            tail_boxcnt.max() > TAIL_SALT_MIN_GROUP
-                        )
-                        if debug and not tail_salt_needed:
+                        tail_salt = bool(tail_boxcnt.max() > TAIL_SALT_MIN_GROUP)
+                        if debug and not tail_salt:
                             print(
                                 f"[knn_join] round {round_idx} salt skipped: "
                                 f"max in-box group {int(tail_boxcnt.max())}",
@@ -1442,7 +1434,7 @@ def knn_join(
             # certification needs.
             lvl_eff = lvl_active
             buckets_eff = buckets
-            if n_rem <= TAIL_MAX_LEFTS:
+            if tail:
                 lvl_eff = F.least(F.lit(16), lvl_active + F.lit(TAIL_LVL_EXTRA))
                 merged: dict[int, tuple[int, float]] = {}
                 for lvl, cnt, rmx in buckets:
@@ -1450,60 +1442,7 @@ def knn_join(
                     c0, r0_ = merged.get(l2, (0, 0.0))
                     merged[l2] = (c0 + cnt, max(r0_, float(rmx)))
                 buckets_eff = sorted((l, c, r_) for l, (c, r_) in merged.items())
-            # split buckets: broadcast-eligible ones share ONE multilevel
-            # join (a single pass over right keyed on (level, cell));
-            # oversized buckets each get a partitioned join. The
-            # broadcast decision sizes the EXPLODED row count —
-            # quantization keeps boxes <= ~3x3 cells except at the
-            # level-4 clamp (near-cover radii), where the factor grows.
-            small: list[list] = []  # [lvl, cnt, rmx, est. exploded rows]
-            big_parts: list[tuple[int, float]] = []  # (lvl, est)
-            for lvl, cnt, rmx in buckets_eff:
-                cell_u = ext_u / (1 << int(lvl))
-                explode_factor = (2.0 * float(rmx) / cell_u + 2.0) ** 2
-                if cnt <= bcast_lefts and cnt * explode_factor <= 2_000_000:
-                    small.append([int(lvl), cnt, float(rmx), cnt * explode_factor])
-                else:
-                    big_parts.append((int(lvl), cnt * explode_factor))
-            # LEVEL MERGE (round 7): the multilevel broadcast join
-            # explodes EVERY right point once per present level, so each
-            # extra level is a full extra probe pass over right. Fold a
-            # coarser broadcast bucket into the next finer one whenever
-            # its re-estimated exploded rows stay under the same 2M cap
-            # — finer cells still cover the box (any level is correct),
-            # the only cost is more broadcast rows. The 16M bench shape
-            # went from 4 present levels to 2, halving the probe rows.
-            small.sort()
-            lvl_remap: dict[int, int] = {}
-            i = 0
-            while i < len(small) - 1:
-                lvl_s, cnt_s, rmx_s, _ = small[i]
-                lvl_t, cnt_t, rmx_t, est_t = small[i + 1]
-                cell_t = ext_u / (1 << int(lvl_t))
-                ef_t = (2.0 * float(rmx_s) / cell_t + 2.0) ** 2
-                if cnt_s * ef_t <= 2_000_000:
-                    for s_, d_ in list(lvl_remap.items()):
-                        if d_ == lvl_s:
-                            lvl_remap[s_] = lvl_t
-                    lvl_remap[lvl_s] = lvl_t
-                    small[i + 1] = [
-                        lvl_t,
-                        cnt_s + cnt_t,
-                        max(rmx_s, rmx_t),
-                        est_t + cnt_s * ef_t,
-                    ]
-                    small.pop(i)
-                else:
-                    i += 1
-            small_rows = sum(e for _, _, _, e in small)
-            while small_rows > 4_000_000 and len(small) > 1:
-                # combined broadcast too big — demote the bucket with
-                # the largest estimated exploded row count, keeping the
-                # broadcast savings for the rest (ADVICE r4)
-                worst = max(range(len(small)), key=lambda i: small[i][3])
-                lvl_w, _, _, est_w = small.pop(worst)
-                big_parts.append((lvl_w, est_w))
-                small_rows -= est_w
+            small, big_parts, lvl_remap = _split_buckets(buckets_eff, ext_u)
             lvl_mapped = lvl_eff
             if lvl_remap:
                 lvl_mapped = F.coalesce(
@@ -1561,7 +1500,7 @@ def knn_join(
             scored = scored.filter(
                 (F.col("r") >= F.lit(cover_r)) | (F.col("dist") <= F.col("r"))
             )
-            if n_rem <= TAIL_MAX_LEFTS and tail_salt_needed:
+            if tail_salt:
                 # tail rounds: SALTED TWO-STAGE top-k. A tail left's ball
                 # can genuinely hold ~10^5-10^6 rights (ring-bound radii
                 # reach into dense cells), and one-exchange-per-left still
@@ -1634,14 +1573,16 @@ def knn_join(
                 )
                 t_sub = _time.perf_counter()
             parts.append(top.filter(certified).select("left_id", "right_id", "dist"))
-            done = top.filter(certified).select("left_id")
+            # one row per certified left (its rn == 1 row; row-local, no
+            # exchange), so the id list is bounded by the round's live
+            # lefts
+            done = top.filter(certified & (F.col("rn") == 1)).select("left_id")
             if n_rem <= 2_000_000:
-                # the certified-id list is bounded by the round's live
-                # lefts — broadcast it so the anti join below probes a
-                # hash relation instead of exchanging BOTH remaining and
-                # done across the full shuffle width (two 256-task
-                # exchanges measured ~2.7 s of the 16M round-0
-                # transition for ~250k-row inputs)
+                # broadcast it so the anti join below probes a hash
+                # relation instead of exchanging BOTH remaining and done
+                # across the full shuffle width (two 256-task exchanges
+                # measured ~2.7 s of the 16M round-0 transition for
+                # ~250k-row inputs)
                 done = F.broadcast(done)
             # full-cover lefts certify even with < k (or zero) candidates
             # — the r < cover filter drops them whether or not they
@@ -1654,7 +1595,7 @@ def knn_join(
             # kth-candidate (dk) transition branch is provably empty —
             # dropped in round 6 (one groupBy + join per round saved).
             # No doubling, no straggler rounds: <= 2 rounds total.
-            if certified_radii:
+            if round_idx > 0:
                 # a certified round cannot leave survivors — this
                 # transition plan only runs as the round-end emptiness
                 # verification. Skip the ring-bound pandas_udf stage
@@ -1663,9 +1604,7 @@ def knn_join(
                 # it unconditionally next round.
                 ring_fallback = F.lit(float(cover_r))
             else:
-                if rb_udf is None:
-                    rb_udf = _ring_rb_udf()
-                ring_fallback = rb_udf(F.col("px"), F.col("py"))
+                ring_fallback = _ring_rb_udf()(F.col("px"), F.col("py"))
             remaining = (
                 remaining.filter(F.col("r") < F.lit(cover_r))
                 .join(done, F.col("lid") == F.col("left_id"), "left_anti")
@@ -1681,7 +1620,6 @@ def knn_join(
                 # — transition + round-end count share ONE barrier
                 .localCheckpoint(eager=False)
             )
-            certified_radii = True  # every transition radius is certified
             lvl_active = lvl_col  # rebuilt frame has no _lvl column
             buckets = _bucket_stats()
             n_rem = sum(c for _, c, _ in buckets)

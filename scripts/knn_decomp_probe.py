@@ -1,6 +1,5 @@
 """One-rep GEO_KNN_DEBUG stage decomposition of knn_join at a given
-shape and parallelism — the diagnostic companion to
-knn_clean_rep_bench.py. Runs ONE warm rep then ONE timed rep inside a
+shape and parallelism. Runs ONE warm rep then ONE timed rep inside a
 single Spark session (solo protocol: caller must ensure no other JVM is
 resident), printing the per-round prep / top-job / transition split so
 @8-vs-@32 scaling loss can be attributed to a stage instead of guessed.
@@ -38,9 +37,9 @@ LEFT_EVERY = int(sys.argv[4]) if len(sys.argv) > 4 else 64
 
 conf = dict(BENCH_CONF)
 if not os.environ.get("KNN_RAM_SHUFFLE"):
-    # default: production disk-shuffle conf (matches
-    # knn_clean_rep_bench.py); KNN_RAM_SHUFFLE=1 keeps BENCH_CONF's
-    # RAM dir to separate disk-IO-bound from CPU-bound stage scaling
+    # default: production disk-shuffle conf; KNN_RAM_SHUFFLE=1 keeps
+    # BENCH_CONF's RAM dir to separate disk-IO-bound from CPU-bound
+    # stage scaling
     for k_ in (
         "spark.local.dir",
         "spark.shuffle.compress",

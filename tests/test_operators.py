@@ -866,12 +866,13 @@ def test_knn_join_disjoint_supports(spark):
     assert got == sorted(brute)
 
 
-def test_knn_join_tail_certified_single_round(spark):
-    """Round-4 session-3 tail certification: for a small euclidean join
-    the coarse-cell prefix sums set every left's radius to a
-    certified-complete bound (smallest Chebyshev cell ring with >= k
-    rights), so the join must converge in ONE round — max_rounds=1 pins
-    that no doubling round survives. Covers the plain case, inclusive
+def test_knn_join_tail_certified_two_rounds(spark):
+    """Tail certification on a small euclidean join: round 0 starts from
+    the density estimate, and every survivor then takes a certified-
+    complete coarse-cell ring bound (smallest Chebyshev cell ring with
+    >= k rights), refined on the fine grid in the tail round — so the
+    join must converge in at most TWO rounds; max_rounds=2 pins that no
+    doubling round survives. Covers the plain case, inclusive
     max_distance capping, and fewer-than-k rights (full-cover certify)."""
     import numpy as np
     from geo_index_spark.operators.knn import knn_join
@@ -895,19 +896,19 @@ def test_knn_join_tail_certified_single_round(spark):
 
     got = sorted(
         (r.left_id, r.right_id, round(r.dist, 6))
-        for r in knn_join(ldf, rdf, 3, max_rounds=1).collect()
+        for r in knn_join(ldf, rdf, 3, max_rounds=2).collect()
     )
     assert got == brute()
     got_md = sorted(
         (r.left_id, r.right_id, round(r.dist, 6))
-        for r in knn_join(ldf, rdf, 3, max_rounds=1, max_distance=5.0).collect()
+        for r in knn_join(ldf, rdf, 3, max_rounds=2, max_distance=5.0).collect()
     )
     assert got_md == brute(max_d=5.0)
-    # fewer than k rights in the whole table -> full-cover certify, one round
+    # fewer than k rights in the whole table -> full-cover certify
     tiny = spark.createDataFrame(rpts[:2], "row_id long, x double, y double")
     got_tiny = sorted(
         (r.left_id, r.right_id, round(r.dist, 6))
-        for r in knn_join(ldf, tiny, 3, max_rounds=1).collect()
+        for r in knn_join(ldf, tiny, 3, max_rounds=2).collect()
     )
     brute_tiny = sorted(
         (lid, rid, round(float(np.hypot(rx - lx, ry - ly)), 6))
@@ -984,13 +985,14 @@ def test_knn_join_haversine_tail_prefilter_dateline(spark, monkeypatch, capfd):
     assert any(rpts[j][1] < 0 for _, j, _ in got)
 
 
-def test_knn_join_certified_upfront_one_round_16m_shape(spark):
-    """Round-5 rework: certified ring radii seed round 0 for EVERY left
-    (not just the <= 5,000 tail), so a mid-size join in the 16M bench's
-    shape — skewed city clusters + uniform spread + deep voids — must
-    converge in ONE round. n_left exceeds the old 5,000 tail threshold
-    to prove it's the new up-front path. Euclidean AND haversine (the
-    haversine bound is the meridian+parallel corner path)."""
+def test_knn_join_certified_two_rounds_16m_shape(spark):
+    """A mid-size join in the 16M bench's shape — skewed city clusters
+    + uniform spread + deep voids — starts from the density estimate and
+    gives every round-0 survivor a certified ring radius, so it must
+    converge in at most TWO rounds. n_left exceeds 5,000 so the
+    survivors cover clusters, uniform spread and voids alike. Euclidean
+    AND haversine (the haversine bound is the meridian+parallel corner
+    path)."""
     import numpy as np
     from geo_index_spark.operators.knn import knn_join
 
@@ -1034,24 +1036,19 @@ def test_knn_join_certified_upfront_one_round_16m_shape(spark):
     for metric in ("euclidean", "haversine"):
         got = sorted(
             (r.left_id, r.right_id, round(r.dist, 6))
-            for r in knn_join(ldf, rdf, 3, metric=metric, max_rounds=1).collect()
+            for r in knn_join(ldf, rdf, 3, metric=metric, max_rounds=2).collect()
         )
         assert got == brute(metric), metric
 
 
 def test_knn_join_two_phase_certified_max_two_rounds(spark):
-    """Round-5 rework, big-left path (forced by dropping the up-front
-    threshold): round 0 runs density radii, every survivor then gets a
-    CERTIFIED radius — kth-candidate distance when k candidates exist,
-    prefix-sum ring bound for voids — so round 1 certifies everyone.
+    """Round 0 runs density radii, every survivor then gets a CERTIFIED
+    radius — the prefix-sum ring bound — so round 1 certifies everyone.
     max_rounds=2 pins that no third round can exist, on the adversarial
     shapes: skewed density, disjoint supports (all-void round 0),
     max_distance starvation, haversine incl. dateline wrap."""
-    import importlib
-
     import numpy as np
-
-    K = importlib.import_module("geo_index_spark.operators.knn")
+    from geo_index_spark.operators.knn import knn_join
 
     rng = np.random.default_rng(53)
     blob = np.column_stack([rng.uniform(0, 1, 300), rng.uniform(0, 1, 300)])
@@ -1070,60 +1067,55 @@ def test_knn_join_two_phase_certified_max_two_rounds(spark):
             out.extend((lid, rid, d) for d, rid in ds[:k])
         return sorted(out)
 
-    old = K.CERT_UPFRONT_MAX_LEFTS
-    K.CERT_UPFRONT_MAX_LEFTS = 0  # force the two-phase (big-left) path
-    try:
-        got = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(ldf, rdf, 3, max_rounds=2).collect()
-        )
-        assert got == brute_euc(lpts, rpts, 3)
-        # max_distance starvation: survivors with < k in-range candidates
-        got_md = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(ldf, rdf, 3, max_rounds=2, max_distance=6.0).collect()
-        )
-        assert got_md == brute_euc(lpts, rpts, 3, max_d=6.0)
-        # disjoint supports: EVERY left fails round 0 with zero candidates
-        far_l = spark.createDataFrame(
-            [(i, float(x), float(y)) for i, (x, y) in enumerate(
-                np.column_stack([rng.uniform(0, 4, 25), rng.uniform(0, 4, 25)])
-            )],
-            "row_id long, x double, y double",
-        )
-        far_r = spark.createDataFrame(rpts[300:], "row_id long, x double, y double")
-        got_far = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(far_l, far_r, 4, max_rounds=2).collect()
-        )
-        assert got_far == brute_euc(
-            [(r.row_id, r.x, r.y) for r in far_l.collect()], rpts[300:], 4
-        )
-        # haversine incl. dateline wrap: same two-round guarantee
-        lon = np.concatenate([rng.uniform(178.5, 180.0, 40), rng.uniform(-180.0, -178.5, 40)])
-        lat = rng.uniform(50.0, 60.0, 80)
-        gpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(np.column_stack([lon, lat]))]
-        gdf = spark.createDataFrame(gpts, "row_id long, x double, y double")
-        R = 6378137.0
+    got = sorted(
+        (r.left_id, r.right_id, round(r.dist, 6))
+        for r in knn_join(ldf, rdf, 3, max_rounds=2).collect()
+    )
+    assert got == brute_euc(lpts, rpts, 3)
+    # max_distance starvation: survivors with < k in-range candidates
+    got_md = sorted(
+        (r.left_id, r.right_id, round(r.dist, 6))
+        for r in knn_join(ldf, rdf, 3, max_rounds=2, max_distance=6.0).collect()
+    )
+    assert got_md == brute_euc(lpts, rpts, 3, max_d=6.0)
+    # disjoint supports: EVERY left fails round 0 with zero candidates
+    far_l = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(
+            np.column_stack([rng.uniform(0, 4, 25), rng.uniform(0, 4, 25)])
+        )],
+        "row_id long, x double, y double",
+    )
+    far_r = spark.createDataFrame(rpts[300:], "row_id long, x double, y double")
+    got_far = sorted(
+        (r.left_id, r.right_id, round(r.dist, 6))
+        for r in knn_join(far_l, far_r, 4, max_rounds=2).collect()
+    )
+    assert got_far == brute_euc(
+        [(r.row_id, r.x, r.y) for r in far_l.collect()], rpts[300:], 4
+    )
+    # haversine incl. dateline wrap: same two-round guarantee
+    lon = np.concatenate([rng.uniform(178.5, 180.0, 40), rng.uniform(-180.0, -178.5, 40)])
+    lat = rng.uniform(50.0, 60.0, 80)
+    gpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(np.column_stack([lon, lat]))]
+    gdf = spark.createDataFrame(gpts, "row_id long, x double, y double")
+    R = 6378137.0
 
-        def hav(lon1, lat1, lon2, lat2):
-            h = (np.sin(np.radians(lat2 - lat1) / 2) ** 2
-                 + np.cos(np.radians(lat1)) * np.cos(np.radians(lat2))
-                 * np.sin(np.radians(lon2 - lon1) / 2) ** 2)
-            return 2.0 * R * np.arcsin(np.sqrt(min(1.0, h)))
+    def hav(lon1, lat1, lon2, lat2):
+        h = (np.sin(np.radians(lat2 - lat1) / 2) ** 2
+             + np.cos(np.radians(lat1)) * np.cos(np.radians(lat2))
+             * np.sin(np.radians(lon2 - lon1) / 2) ** 2)
+        return 2.0 * R * np.arcsin(np.sqrt(min(1.0, h)))
 
-        got_h = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(gdf, gdf, 3, metric="haversine", max_rounds=2).collect()
-        )
-        brute_h = []
-        for i, lx_, ly_ in gpts:
-            ds = sorted((float(hav(lx_, ly_, rx_, ry_)), j) for j, rx_, ry_ in gpts)
-            brute_h.extend((i, j, round(d, 6)) for d, j in ds[:3])
-        assert got_h == sorted(brute_h)
-        assert any((gpts[a][1] > 0) != (gpts[b][1] > 0) for a, b, _ in got_h)
-    finally:
-        K.CERT_UPFRONT_MAX_LEFTS = old
+    got_h = sorted(
+        (r.left_id, r.right_id, round(r.dist, 6))
+        for r in knn_join(gdf, gdf, 3, metric="haversine", max_rounds=2).collect()
+    )
+    brute_h = []
+    for i, lx_, ly_ in gpts:
+        ds = sorted((float(hav(lx_, ly_, rx_, ry_)), j) for j, rx_, ry_ in gpts)
+        brute_h.extend((i, j, round(d, 6)) for d, j in ds[:3])
+    assert got_h == sorted(brute_h)
+    assert any((gpts[a][1] > 0) != (gpts[b][1] > 0) for a, b, _ in got_h)
 
 
 def test_knn_join_empty_sides(spark):
@@ -1214,6 +1206,28 @@ def test_sparse_ring_refine_kernel():
         # produced finite box counts
         assert (out[:2] < 0.8 * r_old[:2]).all()
         assert (boxcnt[:2] < 2**62).all()
+
+
+def test_split_buckets_merge_respects_combined_cap():
+    """Level merge folds a coarser broadcast bucket into the next finer
+    one only while the COMBINED exploded-row estimate stays <= 2M. Here
+    the folded source alone re-estimates to 360k rows at the finer
+    level, but the target already holds 1.8M, so folding would build a
+    2.16M-row broadcast bucket."""
+    from geo_index_spark.operators.knn import _split_buckets
+
+    # ext_u = 1: level-6 cells are 1/64 wide, level-8 cells 1/256; both
+    # radii are half a cell, so each bucket explodes 9x at its own level
+    # and the level-6 boxes explode 36x at level 8
+    small, big, remap = _split_buckets([(6, 10_000, 1 / 128), (8, 200_000, 1 / 512)], 1.0)
+    assert remap == {} and big == []
+    assert [b[0] for b in small] == [6, 8]
+    assert all(est <= 2_000_000 for *_, est in small)
+    assert [b[3] for b in small] == [90_000, 1_800_000]
+    # a source small enough to fit still folds: 1.8M + 1,000 * 36
+    small, big, remap = _split_buckets([(6, 1_000, 1 / 128), (8, 200_000, 1 / 512)], 1.0)
+    assert remap == {6: 8} and big == []
+    assert small == [[8, 201_000, 1 / 128, 1_836_000]]
 
 
 def test_knn_join_right_count_hint(spark):
